@@ -5,12 +5,20 @@ JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 
 Execution is forced with the noop sink (full computation, no driver-side
 collect/serialization cost) — the measured time is the distributed plan,
-which is what scales."""
+which is what scales.
+
+Usage: python bench.py [query ...]
+
+Named queries are timed alone, with the same warm-ups, noop sink,
+clearCache and interleaved reps; that run prints each query's per-rep
+seconds, min and median plus one JSON line, and writes no artifact file.
+"""
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -24,10 +32,15 @@ def force(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
 
-def main() -> None:
+def main(names: list[str]) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from streaming_feature_store_spark.plans.queries import QUERIES
     from streaming_feature_store_spark.session import get_spark
+
+    unknown = [n for n in names if n not in QUERIES]
+    if unknown:
+        sys.exit(f"unknown queries: {' '.join(unknown)}")
+    queries = {n: QUERIES[n] for n in names} if names else QUERIES
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -74,15 +87,16 @@ def main() -> None:
     # with GC logs showing <0.5 s pauses — stalls land on random queries).
     # The warm number is the one that models a cluster, where a query
     # compiles once and runs over thousands of partitions.
-    # Reps are INTERLEAVED (full catalog passes, min per query) rather than
+    # Reps are INTERLEAVED (full passes, min per query) rather than
     # back-to-back: the observed stalls are sustained multi-second windows,
     # which back-to-back reps of one query both land in; spreading a
     # query's reps ~minutes apart decorrelates them.
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
     times: dict[str, float] = {}
     per_rep: dict[str, list[float]] = {}
-    for _ in range(reps):
-        for name, fn in QUERIES.items():
+    for r in range(reps):
+        for name, fn in queries.items():
+            spark.sparkContext.setJobDescription(f"{name} rep{r}")
             t0 = time.time()
             force(fn(spark, sf_dir))
             el = time.time() - t0
@@ -93,6 +107,19 @@ def main() -> None:
             # GC-pressure later queries in the single bench JVM (and so
             # rep 2 re-executes the full plan, not a cached index)
             spark.catalog.clearCache()
+    spark.sparkContext.setJobDescription(None)
+
+    if names:
+        results = {
+            n: {"reps": v, "min": min(v),
+                "median": round(statistics.median(v), 3)}
+            for n, v in per_rep.items()
+        }
+        for n, res in results.items():
+            print(f"{n}: min={res['min']} median={res['median']} {res['reps']}")
+        print(json.dumps({"sf_dir": sf_dir, "reps": reps, "results": results}))
+        spark.stop()
+        return
 
     # headline throughput: full sliding-window feature computation over the
     # events table (the reference's core workload — its simple engine does
@@ -108,8 +135,6 @@ def main() -> None:
     # so give it extra stall immunity beyond the catalog's rep count (this
     # VM's host stalls moved a 2-rep headline 28k <-> 104k events/s on
     # identical code; see PERFORMANCE.md)
-    import statistics
-
     for _ in range(max(reps, 5)):
         t0 = time.time()
         force(sliding_stats(ev, "user_id"))
@@ -222,4 +247,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

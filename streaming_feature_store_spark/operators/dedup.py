@@ -247,24 +247,6 @@ def _jaccard_from_index(idx: DataFrame, id_col: str, threshold: float) -> DataFr
     return out
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    k: int = 16,
-) -> DataFrame:
-    """MinHash signature per doc as k columns ``mh_0..mh_{k-1}``:
-    min over shingle-hashes of xxhash64(shingle_hash, salt_i).
-
-    Computed from the exploded shingle index — k salted hashes per index row
-    + one groupBy(doc) with k MIN aggregates. Everything stays in whole-stage
-    codegen (per-row higher-order lambdas over shingle arrays measured ~10×
-    slower); one shuffle total, map-side partial mins."""
-    idx = _shingle_index(df, text_col, id_col, n)
-    return _minhash_from_index(idx, id_col, k)
-
-
 def _minhash_from_index(idx: DataFrame, id_col: str, k: int) -> DataFrame:
     # expr-string form (r13, as in simhash64): one py4j call per aggregate
     # instead of four; xxhash64(sh, <int literal>) is the identical
@@ -391,8 +373,9 @@ def simhash64(
     built as SQL ``expr()`` strings, one py4j call each, instead of
     composing ~800 Column objects op-by-op (sum/when/bitwiseAND/lit/
     cast/alias each round-trip the py4j socket).  Plan, execution and
-    signatures are bit-identical (probe-asserted over the corpus:
-    tools/simhash_expr_ab.py); invocation cost measured 3.2 s → 0.85 s
+    signatures are bit-identical (probe-asserted over the corpus;
+    PERFORMANCE.md "Round-13 (optimization round 2) evidence");
+    invocation cost measured 3.2 s → 0.85 s
     at sf0.1 — the build cost was ~2.1 s of driver-side Python, paid on
     every call regardless of data size.
     """
@@ -511,7 +494,7 @@ def simhash_near_dups(
     radius 12 — measured 2× wall time). Banding on MinHash similarity has
     no such cliff: per-band match probability is J^r, independent of
     document length. Measured union recall = 1.0 at every test scale
-    (probe: tools/scale_dedup_probe.py).
+    (PERFORMANCE.md, "Training-data operators at 100 k docs").
 
     Scale shape: both tiers are single self-joins on 8-byte band keys over
     O(docs·bands) rows; the shingle index is built ONCE and shared by the

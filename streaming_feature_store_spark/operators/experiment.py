@@ -386,8 +386,8 @@ def uplift_deciles(
     # project to the four needed columns BEFORE the ntile: the
     # distributed ranking localCheckpoints its input, so frame width is
     # checkpoint bytes — the full fact frame would be written verbatim
-    # (measured 87 s -> 17 s at 1e7 rows x 8 cols, tools/
-    # scale_batch10_probe.py)
+    # (measured 87 s -> 17 s at 1e7 rows x 8 cols; PERFORMANCE.md
+    # "Round-7 third batch")
     slim = df.select(
         F.col(score_col),
         *[F.col(c) for c in tiebreak_cols],

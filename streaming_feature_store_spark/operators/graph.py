@@ -51,7 +51,7 @@ def pagerank(
     # join) executes ONCE, not once per derivation (q136 warm 5.2 s ->
     # 3.6 s; what remains is per-iteration job-scheduling floor, which
     # vanishes relative to data work at real graph sizes — 2 M edges x 5
-    # iterations measured 2.3 s total in tools/scale_new_ops_probe.py).
+    # iterations measured 2.3 s total; PERFORMANCE.md "Round-4 operators").
     e = edges.select(
         F.col(src).alias("_src"),
         F.col(dst).alias("_dst"),

@@ -604,7 +604,7 @@ def lsh_cosine_topk(
     (1+bits)) for per-plane agreement p. One table suffices for tightly
     clustered embedding spaces; uniform-ish spaces need several (recall on
     planted ε-neighbors in a uniform 100k corpus: 0 % with 1×12-bit table,
-    covered by tables=4 — tools/scale_dedup_probe.py)."""
+    covered by tables=4 — PERFORMANCE.md "Training-data operators")."""
 
     c = lsh_buckets_all(corpus, dim, bits, tables, id_col, vec_col).select(
         F.col(id_col).alias("nbr_id"),

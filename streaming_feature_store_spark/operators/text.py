@@ -445,8 +445,8 @@ def redact_pii(df: DataFrame, text_col: str = "text", out_col: str | None = None
 
 # ---------------------------------------------------------------------------
 # Corpus statistics: TF-IDF keywords, unigram-LM scoring, PMI collocations
-# (q88/q101/q102 expose these; the probe in tools/scale_text_probe.py runs
-# them at 100k docs)
+# (q88/q101/q102 expose these; PERFORMANCE.md "Corpus statistics at 100k
+# docs" has their scale numbers)
 # ---------------------------------------------------------------------------
 
 

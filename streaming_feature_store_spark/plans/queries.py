@@ -1307,7 +1307,8 @@ def q38_top_parts_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # candidates, exact verification (Jaccard / cosine) runs on candidates only,
 # and the DuckDB oracle computes the same exact result from scratch. Green
 # iff the sketch's recall on this corpus is 1 — which is deterministic
-# (fixed salts, fixed data) and probed in tools/oracle_probe.py.
+# (fixed salts, fixed data) and was probed by a one-off recall script
+# (git history, commit 29dc864, tools/).
 # ---------------------------------------------------------------------------
 
 # Exact 3-shingle Jaccard pair oracle (shared by q39/q40): same CTEs as q22
@@ -1342,7 +1343,8 @@ def q39_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracled against the exact all-pairs Jaccard (q22's pair set): the
     candidate stage is probabilistic in design but deterministic in fact
     (fixed xxhash64 salts), and its recall on this corpus is 1 — probed in
-    tools/oracle_probe.py — so the verified output ≡ the exact result."""
+    the one-off recall script in git history (commit 29dc864, tools/) —
+    so the verified output ≡ the exact result."""
     from streaming_feature_store_spark.operators.dedup import minhash_near_dups
 
     return minhash_near_dups(_t(spark, sf_dir, "documents"), threshold=0.5)
@@ -1365,7 +1367,7 @@ def q40_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ANN over a corpus with genuine near-neighbor structure: the raw embeddings
 # table is near-uniform (max off-diagonal cosine ≈ 0.5, where no honest LSH
-# can reach recall 1 — measured in tools/oracle_probe.py), so q41 plants a
+# can reach recall 1 — measured by the same recall script), so q41 plants a
 # deterministic near-duplicate twin per vector (component d scaled by
 # 1 + ((vec_id·31 + d·7) mod 11 − 5)/100, cosine ≈ 0.999) and asks for
 # top-1 — the realistic near-dup-retrieval workload, reproducible exactly
@@ -10103,7 +10105,8 @@ def q221_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     base = docs.filter(F.col("doc_id") % 3 != 0)
     delta = docs.filter(F.col("doc_id") % 3 == 0)
-    # in production the index is parquet-backed (tools/scale_r9_probe);
+    # in production the index is parquet-backed (PERFORMANCE.md "Round-9:
+    # incrementality probes");
     # in this self-contained query it is built inline and consumed by
     # both the base-pairs branch and the merge — persist it once
     idx = persist_tracked(build_minhash_index(base))

@@ -17,21 +17,28 @@ def run_concurrent(jobs: Sequence[Callable[[], object]]) -> list[object]:
     failure is surfaced: a multi-write failure raises ONE error naming
     each failed job instead of whichever happened to be submitted
     first, so a torn multi-root commit is diagnosable from the message.
+    An interrupt is not a job failure: it is re-raised immediately.
     """
     if not jobs:
         return []
     if len(jobs) == 1:
         return [jobs[0]()]
-    with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-        futs = [pool.submit(j) for j in jobs]
-        results: list[object] = []
-        errors: list[tuple[int, BaseException]] = []
-        for i, fut in enumerate(futs):
+    pool = ThreadPoolExecutor(max_workers=len(jobs))
+    results: list[object] = []
+    errors: list[tuple[int, Exception]] = []
+    try:
+        for i, fut in enumerate([pool.submit(j) for j in jobs]):
             try:
                 results.append(fut.result())
-            except BaseException as exc:  # noqa: BLE001 — aggregated below
+            except Exception as exc:  # noqa: BLE001 — aggregated below
                 errors.append((i, exc))
                 results.append(None)
+    except BaseException:
+        # KeyboardInterrupt / SystemExit (raised here or inside a job)
+        # propagate at once, without waiting for the remaining jobs
+        pool.shutdown(wait=False, cancel_futures=True)
+        raise
+    pool.shutdown()
     if errors:
         if len(errors) == 1:
             raise errors[0][1]

@@ -42,6 +42,16 @@ def default_cpus() -> int:
         return 32
 
 
+def default_driver_memory() -> str:
+    """Driver heap for local runs: 16g, capped at a quarter of physical RAM
+    (the JVM's own default heap share). A pinned heap (``-Xms`` = ``-Xmx``)
+    ends up resident, and the slow test tier runs a second JVM beside the
+    test session's: at 55% of a 16 GB host one was OOM-killed."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    heap_mb = ram_mb // 4
+    return "16g" if heap_mb >= 16 * 1024 else f"{heap_mb}m"
+
+
 def get_spark(
     app_name: str = DEFAULT_APP_NAME,
     master: str | None = None,
@@ -56,9 +66,8 @@ def get_spark(
     """
     cpus = default_cpus()
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
-    shuffle = shuffle_partitions or int(
-        os.environ.get("SPARK_SQL_SHUFFLE_PARTITIONS", str(cpus))
-    )
+    shuffle = shuffle_partitions or cpus
+    heap = os.environ.get("SPARK_DRIVER_MEMORY", default_driver_memory())
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -77,19 +86,20 @@ def get_spark(
         # 128 MB input splits: at 100 TB that is ~800k tasks — fine for a big
         # cluster; AQE coalesces the small tail.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.ui.enabled", os.environ.get("SPARK_UI_ENABLED", "false"))
+        .config("spark.ui.enabled", "false")
         # local mode runs driver+executor in ONE JVM with 32 task threads;
         # 8g left ~250 MB/task and GC-thrashed long catalog runs, while an
         # unpinned 32g heap produced rare tens-of-seconds full-GC pauses
         # mid-query (measured: same query 2s or 23s run-to-run). 16g PINNED
-        # (-Xms=-Xmx, no resize) with G1 region sizing is the stable point.
+        # (-Xms=-Xmx, no resize) with G1 region sizing is the stable point;
+        # smaller hosts get default_driver_memory()'s RAM-capped heap.
         # On a real cluster this is per-executor sizing.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", heap)
         .config(
             "spark.driver.extraJavaOptions",
             os.environ.get(
                 "SPARK_DRIVER_JAVA_OPTS",
-                "-Xms16g -XX:+UseG1GC -XX:G1HeapRegionSize=16m",
+                f"-Xms{heap} -XX:+UseG1GC -XX:G1HeapRegionSize=16m",
             ),
         )
     )
@@ -101,33 +111,13 @@ def get_spark(
     extra_pkgs = os.environ.get("SPARK_GRAFT_EXTRA_PACKAGES", "")
     if extra_pkgs:
         builder = builder.config("spark.jars.packages", extra_pkgs)
-    # AQE initial-partition headroom stays an ENV OVERRIDE, factor 1 by
-    # default: the round-7 clean A/B (tools/aqe_ab_probe.py, reps=3 min,
-    # /tmp/aqe_ab_sf{01,1_clean}.jsonl) showed the r6 "factor 4 fixes
-    # the sf1.0 dedup spill tail" finding was mostly one-shot stall
-    # noise — under clean measurement factor 4 is neutral on the dedup
-    # family and REGRESSES q119 ~2x at sf1.0 (5.1s -> 9.9s: 128 initial
-    # partitions quadruple the task rounds of every stage AQE cannot
-    # coalesce, e.g. post-cache window stages). The real lever is
-    # cached-plan coalescing below, which wins on its own at BOTH
-    # scales. Set SPARK_GRAFT_AQE_INITIAL_FACTOR>1 only for genuinely
-    # skew-bound deployments where oversized partitions spill before
-    # AQE can split them.
-    try:
-        aqe_factor = int(os.environ.get("SPARK_GRAFT_AQE_INITIAL_FACTOR", "1"))
-    except ValueError:
-        aqe_factor = 1
-    if aqe_factor > 1:
-        builder = builder.config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            str(shuffle * aqe_factor),
-        )
     # DEFAULT (round 7): let AQE coalesce CACHED plan output. Without
     # this, InMemoryRelation pins the pre-AQE shuffle partition count
     # and every consumer of a persisted intermediate pays
-    # static-partition tiny-task rounds. Measured A/B (min of 3,
-    # tools/aqe_ab_probe.py): sf0.1 q101 2.05s->1.15s, q119
-    # 4.32s->2.78s, q67 3.00s->2.44s; sf1.0 q119 5.09s->4.86s, q39
+    # static-partition tiny-task rounds. Measured A/B (min of 3;
+    # PERFORMANCE.md "Round-7: cached-plan AQE coalescing is the session
+    # default"): sf0.1 q101 2.05s->1.15s, q119 4.32s->2.78s, q67
+    # 3.00s->2.44s; sf1.0 q119 5.09s->4.86s, q39
     # 6.51s->5.43s, rest within noise — faster than the r6 baseline on
     # every probed query at both scales, with no knob. Trade-off: a
     # cached plan's output partitioning is no longer a stable contract

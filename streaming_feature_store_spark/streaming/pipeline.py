@@ -46,8 +46,8 @@ def read_file_stream(
     live tailing (bounded batch latency), pass ``None`` for
     replay/backfill so an availableNow run drains the whole backlog as ONE
     batch — each micro-batch pays a latest-view bucket rewrite in the
-    sink, so batch count dominates backfill cost (measured in
-    tools/replay_probe.py: 2 M events end-to-end 13.7 k events/s at
+    sink, so batch count dominates backfill cost (PERFORMANCE.md, "Full
+    streaming replay": 2 M events end-to-end 13.7 k events/s at
     16 files/batch vs 107.6 k single-batch)."""
     reader = spark.readStream.format(fmt).schema(schema).option("path", path)
     if max_files_per_trigger is not None:

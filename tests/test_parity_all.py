@@ -7,6 +7,7 @@ configuration doesn't slow the sweep. This is what keeps future queries from
 landing without a locally-verified oracle (VERDICT r2, next-round #10).
 """
 
+import os
 import subprocess
 import sys
 
@@ -17,7 +18,7 @@ import pytest
 def test_all_queries_match_oracle_sf0001():
     proc = subprocess.run(
         [sys.executable, "tools/check_parity.py", "/root/testdata/sf0.001"],
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         capture_output=True,
         text=True,
         timeout=1500,

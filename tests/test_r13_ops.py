@@ -182,6 +182,33 @@ def test_run_concurrent_surfaces_every_failure():
     assert run_concurrent([]) == []
 
 
+def test_run_concurrent_reraises_interrupts():
+    import threading
+
+    from streaming_feature_store_spark.poolutil import run_concurrent
+
+    release = threading.Event()
+
+    def interrupted():
+        raise KeyboardInterrupt
+
+    def slow_ok():
+        release.wait(10)
+        return 1
+
+    # the interrupt surfaces as itself, before the still-running job ends
+    with pytest.raises(KeyboardInterrupt):
+        run_concurrent([interrupted, slow_ok])
+    assert not release.is_set()
+    release.set()
+
+    def exits():
+        raise SystemExit(3)
+
+    with pytest.raises(SystemExit):
+        run_concurrent([slow_ok, exits])
+
+
 # -- interval-spec guard (ADVICE r12) ---------------------------------------
 
 

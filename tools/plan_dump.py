@@ -6,7 +6,7 @@ Writes ``<out_dir>/<query>_<suffix>.txt`` for each selected query (default:
 all).  Queries that execute work inside their constructor (the persisted-
 lifecycle family builds state under /tmp and localizes the result) still
 produce a plan for their RETURNED frame; for those the interesting plans are
-the internal steps, which the probes capture — the file notes this.
+the internal steps, quoted in OPTIMIZATION_r12.md — the file notes this.
 
 The capture runs on the same session config as bench.py so plan shapes
 (AQE, broadcast thresholds, shuffle partitions) match what the bench times.
@@ -64,9 +64,8 @@ def main() -> None:
             header = (
                 "NOTE: this query executes its state lifecycle inside the\n"
                 "constructor and returns a LOCALIZED result; the plan below\n"
-                "is the returned frame only. Internal step plans are captured\n"
-                "by the probe tools (tools/scale_r1?_probe.py) and quoted in\n"
-                "OPTIMIZATION_r12.md.\n\n"
+                "is the returned frame only. Internal step plans are quoted\n"
+                "in OPTIMIZATION_r12.md.\n\n"
             )
         with open(path, "w") as f:
             f.write(header + text)

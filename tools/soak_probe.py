@@ -1,6 +1,6 @@
 """Sustained-load freshness soak with a mid-run restart (VERDICT r6 #5).
 
-`tools/freshness_probe.py` measures steady-state event→queryable
+`perfbench/run.py` measures steady-state event→queryable
 freshness; the reference's uptime/freshness SLOs (its README "~15 s
 end-to-end", "99.9% uptime") are steady-state numbers too.  This probe
 measures what neither does: the freshness COST OF A RECOVERY.  It runs
@@ -31,7 +31,7 @@ import tempfile
 import threading
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F
 
